@@ -265,7 +265,7 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
     # directory exists, and every relation folder's dimension tables are
     # satisfiable (an earlier folder in THIS config, or a committed
     # snapshot on disk) — all readable from names and CURRENT pointers.
-    from ght2dm_spark.snapshots import _read_current
+    from ght2dm_spark.snapshots import current_version
 
     dim_tables = {
         "org_members": ("gh_users", "gh_organizations"),
@@ -291,12 +291,12 @@ def run_from_config(spark: SparkSession, cfg: RunConfig) -> dict[str, str]:
             # on a non-incremental run would pass validation and still
             # fail hours later in _dim (the exact late failure this
             # fail-fast sweep exists to prevent).
-            if cfg.incremental and _read_current(out / t) is not None:
+            if cfg.incremental and current_version(out / t) is not None:
                 continue
             hint = (
                 f"a committed snapshot exists at {out / t} but this run "
                 "is not incremental (set incremental=true to read it)"
-                if _read_current(out / t) is not None
+                if current_version(out / t) is not None
                 else f"no committed snapshot exists at {out / t}"
             )
             raise ValueError(

@@ -66,18 +66,12 @@ from pyspark.sql import functions as F
 from pathlib import Path
 
 from ght2dm_spark.snapshots import (
-    _DATA,
-    SnapshotConflictError,
-    _load_manifest,
-    _read_current,
-    _read_files_with_deletes,
-    commit,
+    _commit_onto,
+    _pin,
+    _window_reads,
     commit_stream_batch,
-    delete_increment_stats,
+    current_version,
     last_streamed_batch,
-    prepare_commit,
-    read_delete_increment,
-    read_increment,
     read_snapshot,
 )
 
@@ -412,48 +406,25 @@ def _key_prune(
     return prune or None, in_lists or None
 
 
-def _tip_seq(path: str) -> int | None:
-    """Live snapshot's seq — O(1): one pointer read + one manifest
-    load, NOT a history() walk json-loading the whole parent chain
-    (which grows with table age, on the hot maintenance path)."""
-    table = Path(path)
-    name = _read_current(table)
-    if name is None:
-        return None
-    return int(_load_manifest(table, name)["seq"])
-
-
-def _dest_base(dest: str) -> tuple[str | None, dict, dict | None]:
-    """(CURRENT manifest name, its meta, the manifest itself) in ONE
-    resolution — every refresh/verify derives its watermark, its state
-    read, AND its conflict base from this single pin, so a commit
-    landing mid-refresh raises SnapshotConflictError instead of being
-    silently double-merged (the compact_snapshot/apply_changes race,
-    closed here the same way)."""
-    table = Path(dest)
-    name = _read_current(table)
-    if name is None:
-        return None, {}, None
-    m = _load_manifest(table, name)
-    return name, m.get("meta", {}), m
-
-
-def _read_pinned(
-    spark, path: str, manifest: dict, schema=None, merge_schema: bool = False
-):
-    files = [str(Path(path) / _DATA / f) for f in manifest["files"]]
-    if not files:
-        return None
-    # every _read_pinned target is ENGINE-written state (refresh dest,
-    # sink state, join view) whose manifest records its schema — plan
-    # at that recorded schema instead of scheduling a footer-inference
-    # job per read (one such job per refresh/micro-batch otherwise)
-    if schema is None and manifest.get("schema"):
-        merge_schema = True
-    return _read_files_with_deletes(
-        spark, Path(path), manifest, files, schema=schema,
-        merge_schema=merge_schema,
+def _window_delta(
+    spark: SparkSession, source: str, last: int, upto: int, schema
+) -> tuple[DataFrame | None, DataFrame | None, DataFrame | None]:
+    """(appended rows, deleted keys, rows those deletes removed) in the
+    source window (``last``, ``upto``] — the read sequence every
+    refresh runs, from ONE window resolution.  merge_schema when no
+    schema is declared: a schema-evolving append inside the window must
+    not be planned from one old footer."""
+    ms = schema is None
+    added, dkeys, key_stats = _window_reads(
+        spark, source, last, upto, schema=schema, merge_schema=ms
     )
+    removed = None
+    if dkeys is not None:
+        removed = _removed_rows(
+            spark, source, last, dkeys, schema, merge_schema=ms,
+            key_stats=key_stats,
+        )
+    return added, dkeys, removed
 
 
 def refresh_aggregate(
@@ -482,7 +453,7 @@ def refresh_aggregate(
     below) — float retraction additionally suffers cancellation drift.
     """
     _validate_aggs(keys, aggs)
-    src_version = _tip_seq(source)
+    src_version = current_version(source)
     if src_version is None:
         return False
 
@@ -492,26 +463,21 @@ def refresh_aggregate(
     # into this refresh yet recorded as unprocessed — and double-counted
     # by the next one.
     # ONE dest resolution: watermark, prior state, and conflict base
-    dest_base, dmeta, dmanifest = _dest_base(dest)
-    last = dmeta.get("source_version")
-    # merge_schema when no schema is declared: a schema-evolving append
-    # inside the window must not be planned from one old footer
-    ms = schema is None
+    base = _pin(dest)
+    last = base.meta.get("source_version")
 
     def _commit_state(merged: DataFrame) -> bool:
         out = _mask_sums(merged, aggs).select(_state_cols(keys, aggs))
-        _commit_guarded(
-            out, dest,
-            {"source_version": src_version, "view_def": _view_def(aggs)},
-            dest_base,
-            "first refresh",
+        _commit_onto(
+            out, dest, base.name, "the first refresh",
+            meta={"source_version": src_version, "view_def": _view_def(aggs)},
         )
         return True
 
     def _full_recompute() -> bool:
         full = read_snapshot(
             spark, source, schema=schema, version=src_version,
-            merge_schema=ms,
+            merge_schema=schema is None,
         )
         if full is None:
             return False
@@ -522,11 +488,9 @@ def refresh_aggregate(
     if src_version == last:
         return False
 
-    state = (
-        _read_pinned(spark, dest, dmanifest) if dmanifest is not None else None
-    )
+    state = base.read(spark, merge_schema=True)
     if state is not None and _def_changed(
-        dmeta.get("view_def"), aggs, _state_cols(keys, aggs), state
+        base.meta.get("view_def"), aggs, _state_cols(keys, aggs), state
     ):
         # legacy state (pre-maintenance-columns) OR a changed view
         # definition — including same-schema semantic changes like
@@ -535,13 +499,7 @@ def refresh_aggregate(
         # rebuild; every later refresh is O(delta) again
         return _full_recompute()
 
-    dkeys = read_delete_increment(
-        spark, source, last, upto_version=src_version
-    )
-    delta = read_increment(
-        spark, source, since_version=last, schema=schema,
-        upto_version=src_version, merge_schema=ms,
-    )
+    delta, dkeys, removed = _window_delta(spark, source, last, src_version, schema)
     if delta is None and dkeys is None:
         return False
 
@@ -554,11 +512,6 @@ def refresh_aggregate(
     if dkeys is None:
         # delta is not None here (the None/None case returned above)
         return _commit_state(_merge_frames(frames, keys, aggs))
-
-    removed = _removed_rows(
-        spark, source, last, dkeys, schema, merge_schema=ms,
-        key_stats=delete_increment_stats(source, last, src_version),
-    )
     if not frames:
         # no prior state and no appended rows (delete-only window on an
         # empty view) — a merge has nothing to start from; recompute
@@ -597,7 +550,7 @@ def refresh_aggregate(
         gprune, gins = _key_prune(affected, null_keys_match=True)
         cur = read_snapshot(
             spark, source, schema=schema, version=src_version,
-            merge_schema=ms, prune=gprune,
+            merge_schema=schema is None, prune=gprune,
         )
         if cur is not None and gins:
             for c, vals in gins.items():
@@ -636,8 +589,8 @@ def verify_aggregate(
     # come from the same manifest, or an audit racing a refresh
     # recomputes at the old version against the new state and pages
     # someone on a perfectly maintained table
-    _base, dmeta, dmanifest = _dest_base(dest)
-    ver = dmeta.get("source_version")
+    base = _pin(dest)
+    ver = base.meta.get("source_version")
     # merge_schema mirrors refresh_aggregate's reads: the audit must
     # plan a schema-evolved source the same way the refresh did, not
     # from one arbitrary footer
@@ -652,7 +605,7 @@ def verify_aggregate(
     if full is None:
         # never refreshed (or the source vanished): healthy iff dest
         # holds no files either
-        return dmanifest is None or not dmanifest["files"]
+        return not base.files
     # avg recomputes as exact-sum / non-NULL-count — the SAME operands
     # and single double division the maintained state uses — never
     # F.avg, whose order-dependent double accumulation can differ in
@@ -666,9 +619,7 @@ def verify_aggregate(
     expect = full.groupBy(*keys).agg(
         *[_expect_expr(out, fn, col) for out, (fn, col) in aggs.items()]
     )
-    got: DataFrame | None = (
-        _read_pinned(spark, dest, dmanifest) if dmanifest is not None else None
-    )
+    got = base.read(spark, merge_schema=True)
     if got is None:
         return False
     cols = expect.columns
@@ -696,47 +647,26 @@ def _sink_state(
     equality for pre-pin legacy state) — a sink cannot rebuild state
     (the table isn't its source), unlike refresh_aggregate, which
     rebuilds in place."""
-    dest_base, dmeta, dmanifest = _dest_base(dest)
-    state = None
-    if dmanifest is not None:
-        last = dmanifest.get("stream_batch")
-        if last is not None and int(batch_id) <= int(last):
-            return True, dest_base, None
-        state = _read_pinned(spark, dest, dmanifest)
-        if (
-            state is not None
-            and aggs is not None
-            and _def_changed(
-                dmeta.get("view_def"), aggs, _state_cols(keys, aggs), state
-            )
-        ):
-            raise ValueError(
-                f"{dest}: committed state belongs to a different view "
-                "definition (or lacks maintenance columns) — a streaming "
-                "sink cannot rebuild it (the table is not its source); "
-                "delete the dest and replay, or upgrade it with one "
-                "refresh_aggregate over the batch source"
-            )
-    return False, dest_base, state
-
-
-def _commit_guarded(
-    out: DataFrame, dest: str, meta: dict, dest_base: str | None, what: str
-) -> None:
-    """Overwrite-commit ``out`` onto the pinned ``dest_base``, closing
-    the first-commit race: prepare_commit can only detect a concurrent
-    writer via parent mismatch when a base exists, so when the caller
-    pinned None (first refresh/batch) and a parent appeared meanwhile,
-    raise instead of silently clobbering it.  One helper for every
-    maintenance writer — the conflict idiom must not drift between the
-    refresh, the sink, and future writers."""
-    p = prepare_commit(out, dest, mode="overwrite", meta=meta, parent=dest_base)
-    if dest_base is None and p.parent is not None:
-        raise SnapshotConflictError(
-            f"{dest}: table committed concurrently during {what} — "
-            "re-run against the new snapshot"
+    base = _pin(dest)
+    last = base.stream_batch
+    if last is not None and int(batch_id) <= int(last):
+        return True, base.name, None
+    state = base.read(spark, merge_schema=True)
+    if (
+        state is not None
+        and aggs is not None
+        and _def_changed(
+            base.meta.get("view_def"), aggs, _state_cols(keys, aggs), state
         )
-    commit(p)
+    ):
+        raise ValueError(
+            f"{dest}: committed state belongs to a different view "
+            "definition (or lacks maintenance columns) — a streaming "
+            "sink cannot rebuild it (the table is not its source); "
+            "delete the dest and replay, or upgrade it with one "
+            "refresh_aggregate over the batch source"
+        )
+    return False, base.name, state
 
 
 def _commit_sink(
@@ -749,9 +679,7 @@ def _commit_sink(
     meta: dict = {"batch_id": int(batch_id)}
     if aggs is not None:
         meta["view_def"] = _view_def(aggs)
-    _commit_guarded(
-        out, dest, meta, dest_base, "the first micro-batch merge"
-    )
+    _commit_onto(out, dest, dest_base, "the first micro-batch merge", meta=meta)
 
 
 def aggregate_sink(dest: str, keys: list[str], aggs: dict):
@@ -1003,15 +931,16 @@ def refresh_join(
     one side — the same reason CDC pipelines never re-join history.
     First call seeds with the full join.  Returns False when neither
     source moved."""
-    lv, rv = _tip_seq(left_source), _tip_seq(right_source)
+    lv, rv = current_version(left_source), current_version(right_source)
     if lv is None or rv is None:
         return False
     # ONE dest resolution: watermarks and conflict base (the
     # refresh_aggregate race note applies doubly to an APPEND — an
     # unpinned prepare would chain the duplicate delta onto the racer's
     # commit and pass the conflict check)
-    dest_base, meta, _dm = _dest_base(dest)
-    last_lv, last_rv = meta.get("left_version"), meta.get("right_version")
+    base = _pin(dest)
+    last_lv = base.meta.get("left_version")
+    last_rv = base.meta.get("right_version")
 
     if last_lv is None:
         # pinned at (lv, rv) — the recorded versions must be exactly
@@ -1028,10 +957,9 @@ def refresh_join(
             return False
         _check_no_reserved(left, left_source)
         _check_no_reserved(right, right_source)
-        _commit_guarded(
-            left.join(right, on).withColumn(_W, F.lit(1)),
-            dest, {"left_version": lv, "right_version": rv}, dest_base,
-            "the seeding join",
+        _commit_onto(
+            left.join(right, on).withColumn(_W, F.lit(1)), dest, base.name,
+            "the seeding join", meta={"left_version": lv, "right_version": rv},
         )
         return True
 
@@ -1046,29 +974,19 @@ def refresh_join(
         rows cannot; they surface NULL for it, the merge-schema rule."""
         if upto == last:
             return None
-        ms = schema is None
-        parts = []
-        added = read_increment(
-            spark, source, since_version=last, schema=schema,
-            upto_version=upto, merge_schema=ms,
-        )
+        added, _dkeys, removed = _window_delta(spark, source, last, upto, schema)
         if added is not None:
             _check_no_reserved(added, source)
-            parts.append(added.withColumn(wcol, F.lit(1)))
-        dkeys = read_delete_increment(spark, source, last, upto_version=upto)
-        if dkeys is not None:
-            removed = _removed_rows(
-                spark, source, last, dkeys, schema, merge_schema=ms,
-                key_stats=delete_increment_stats(source, last, upto),
-            )
-            if removed is not None:
-                parts.append(removed.withColumn(wcol, F.lit(-1)))
+        parts = [
+            df.withColumn(wcol, F.lit(w))
+            for df, w in ((added, 1), (removed, -1))
+            if df is not None
+        ]
         if not parts:
             return None
-        out = parts[0]
-        for x in parts[1:]:
-            out = out.unionByName(x, allowMissingColumns=True)
-        return out
+        if len(parts) == 1:
+            return parts[0]
+        return parts[0].unionByName(parts[1], allowMissingColumns=True)
 
     dl = _signed_delta(left_source, last_lv, lv, schema_left, "__wl")
     dr = _signed_delta(right_source, last_rv, rv, schema_right, "__wr")
@@ -1112,14 +1030,10 @@ def refresh_join(
         # the window (dl carries the new column, l0 does not) — missing
         # columns surface NULL, the merge-schema rule
         delta = delta.unionByName(x, allowMissingColumns=True)
-    p = prepare_commit(
-        delta,
-        dest,
-        mode="append",
+    _commit_onto(
+        delta, dest, base.name, "the join refresh", mode="append",
         meta={"left_version": lv, "right_version": rv},
-        parent=dest_base,
     )
-    commit(p)
     return True
 
 
@@ -1167,22 +1081,18 @@ def consolidate_join(spark: SparkSession, dest: str) -> bool:
     the consolidation conflicts loudly instead of losing its delta.
     The pinned left/right versions survive via sticky meta.  Returns
     False when the table has never committed."""
-    dest_base, _meta, dmanifest = _dest_base(dest)
-    if dmanifest is None:
-        return False
+    base = _pin(dest)
     # merge_schema: delta appends evolve the dest's schema (a source
     # column added mid-history); planning from one arbitrary footer
     # here would overwrite-commit the table WITHOUT the evolved column
     # — permanent loss through a maintenance op
-    df = _read_pinned(spark, dest, dmanifest, merge_schema=True)
+    df = base.read(spark, merge_schema=True)
     if df is None:
         return False
     if _W not in df.columns:
         return False  # legacy seed only: nothing to fold
     net, _payload = _net_join(df)
-    _commit_guarded(
-        net.filter(F.col(_W) != 0), dest, {}, dest_base, "join consolidation"
-    )
+    _commit_onto(net.filter(F.col(_W) != 0), dest, base.name, "join consolidation")
     return True
 
 
@@ -1200,13 +1110,13 @@ def verify_join(
     (multiset-exact both ways), independent of commits that landed
     after the refresh — the join-side twin of :func:`verify_aggregate`.
     The audited rows come from the SAME pinned manifest as the
-    versions (one _dest_base resolution), not a second CURRENT read —
+    versions (one pinned resolution), not a second CURRENT read —
     a refresh landing mid-audit must not page anyone on a healthy
     table."""
-    _base, dmeta, dmanifest = _dest_base(dest)
-    lv, rv = dmeta.get("left_version"), dmeta.get("right_version")
+    base = _pin(dest)
+    lv, rv = base.meta.get("left_version"), base.meta.get("right_version")
     if lv is None or rv is None:
-        return dmanifest is None or not dmanifest["files"]
+        return not base.files
     left = read_snapshot(
         spark, left_source, schema=schema_left, version=lv,
         merge_schema=schema_left is None,
@@ -1215,11 +1125,7 @@ def verify_join(
         spark, right_source, schema=schema_right, version=rv,
         merge_schema=schema_right is None,
     )
-    state = (
-        _read_pinned(spark, dest, dmanifest, merge_schema=True)
-        if dmanifest is not None
-        else None
-    )
+    state = base.read(spark, merge_schema=True)
     got = None
     if state is not None:
         if _W in state.columns:

@@ -266,7 +266,7 @@ def t1_asof_time_travel(spark, sf_dir):
     is built by three commits (seed, append, merge-on-read delete),
     then read back three ways — pinned version 0, AS OF an instant
     between the append and the delete (resolved via manifest
-    timestamps, snapshots._manifest_for), and CURRENT.  The oracle
+    timestamps, snapshots._resolve), and CURRENT.  The oracle
     recomputes each version's content directly from the base table, so
     a hash match certifies that AS OF resolution returns exactly the
     rows that existed at the instant — including that the later

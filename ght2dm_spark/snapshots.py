@@ -44,6 +44,36 @@ on a 100 TB table laid out by key (or Z-ordered via
 files that can contain it instead of listing 100 k.  Files without
 stats for a pruned column are conservatively kept, so stats are an
 optimization, never a correctness dependency.
+
+This module is the only one that reads or writes manifests, data paths
+or the CURRENT/ref pointers.  Manifest keys, by the commit modes that
+write them (``overwrite``/``append`` from :func:`prepare_commit`,
+``delete`` from :func:`delete_rows`, ``rewrite`` from
+:func:`rewrite_small_files`) and whether a child commit carries them:
+
+- ``seq``, ``ts``, ``parent``, ``mode``: every mode, never carried
+  (``ts`` is stamped strictly above the parent's — see ``_stamp_ts``).
+- ``files``, ``stats``, ``file_seqs``: every mode.  A child keeps the
+  entries of the parent files it keeps (append and delete keep all,
+  rewrite the well-sized ones, overwrite none); ``file_seqs`` maps each
+  file to the seq that added it (absent on legacy manifests: seq 0).
+- ``schema``: the logical {column: type}.  Overwrite records the
+  frame's, append widens the parent's, delete and rewrite carry it.
+  Absent on legacy manifests (reads then unify footers).
+- ``delete_files``, ``delete_keys``, ``delete_seqs``, ``delete_schema``,
+  ``delete_stats``: the merge-on-read delete state.  Delete writes it;
+  append, delete and rewrite carry it; overwrite drops it (compaction
+  materializes deletes).
+- ``meta``: the caller's ``prepare_commit(meta=...)``.  The sticky keys
+  (``_STICKY_META``, the incremental layer's refresh watermarks and
+  view definition) carry to every child; the rest (``batch_id``) stay
+  on the commit that wrote them.
+- ``stream_batch``: the highest streamed batch id; carried by every
+  mode and only ever advances (see :func:`last_streamed_batch`).
+
+Every child manifest comes from ``_child`` and is written by
+``_publish``; every parent-chain walk is ``_walk``, which raises on a
+parent cycle.
 """
 
 from __future__ import annotations
@@ -54,17 +84,18 @@ import re
 import shutil
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _CURRENT = "CURRENT"
-#: meta keys carried from parent to child across EVERY commit (the
-#: incremental layer's refresh watermarks — snapshot-level state, like
-#: stream_batch); an explicit new value in ``meta`` still overrides.
+#: meta keys every child carries (an explicit new value still overrides)
 _STICKY_META = ("source_version", "left_version", "right_version", "view_def")
+_DELETE_STATE = (
+    "delete_files", "delete_keys", "delete_seqs", "delete_schema", "delete_stats"
+)
 # vacuum() only unlinks _atomic_write temps older than this — a fresh
 # tmp may belong to a concurrent writer between tmp-write and replace.
 _STALE_TMP_SECONDS = 300
@@ -73,6 +104,7 @@ _MANIFESTS = "_manifests"
 _DATA = "data"
 _TAGS = "_tags"
 _BRANCHES = "_branches"
+_REF_DIRS = {"tag": _TAGS, "branch": _BRANCHES}
 _TAG_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,63}$")
 #: the implicit branch name of the CURRENT pointer — reserved so a
 #: named branch can never shadow the main line
@@ -251,6 +283,117 @@ def _load_manifest(table: Path, name: str) -> dict:
         return json.load(f)
 
 
+def _name_seq(name: str) -> int:
+    """seq from a manifest NAME (``m-{seq:06d}-{id}.json``)."""
+    return int(name.split("-")[1])
+
+
+def _current(table: Path) -> tuple[str, int] | None:
+    """(name, seq) of CURRENT from the pointer and the manifest NAME
+    alone — no manifest load, so per-trigger and per-refresh polling
+    stays O(1) as the manifest (per-file stats) grows."""
+    name = _read_current(table)
+    return None if name is None else (name, _name_seq(name))
+
+
+def current_version(path: str | Path) -> int | None:
+    """Live snapshot's seq, or None if the table has never committed."""
+    cur = _current(Path(path))
+    return None if cur is None else cur[1]
+
+
+def _walk(table: Path, head: str | None):
+    """(name, manifest) pairs from ``head`` along parent links,
+    newest-first — the only chain walk.  From CURRENT this is the
+    COMMITTED lineage: manifests staged by a crashed run are unreachable
+    and never appear, so time travel and vacuum can't be confused by
+    them.  Ends where vacuum truncated the chain; a parent CYCLE
+    (hand-edited or corrupt manifest) raises instead of looping forever
+    or passing off a truncated history as the whole one."""
+    seen: set[str] = set()
+    name = head
+    while name is not None:
+        if name in seen:
+            raise ValueError(
+                f"{table}: manifest parent cycle at {name!r} — the chain "
+                "is corrupt; restore CURRENT from a good manifest"
+            )
+        seen.add(name)
+        try:
+            m = _load_manifest(table, name)
+        except FileNotFoundError:
+            return
+        yield name, m
+        name = m.get("parent")
+
+
+@dataclass(frozen=True)
+class _Pin:
+    """One resolved manifest: the conflict base, watermarks and file set
+    of an operation all come from it — resolving CURRENT twice lets a
+    commit land in between.  ``name`` None is a table that has never
+    committed (no files, no meta)."""
+
+    table: Path
+    name: str | None = None
+    m: dict = field(default_factory=dict)
+
+    @property
+    def seq(self) -> int:
+        return int(self.m["seq"])
+
+    @property
+    def files(self) -> list[str]:
+        return self.m.get("files", [])
+
+    @property
+    def deletes(self) -> list[str]:
+        return self.m.get("delete_files", [])
+
+    @property
+    def meta(self) -> dict:
+        return self.m.get("meta", {})
+
+    @property
+    def stream_batch(self) -> int | None:
+        return self.m.get("stream_batch")
+
+    def paths(self, files: list[str] | None = None) -> list[str]:
+        names = self.files if files is None else files
+        return [str(self.table / _DATA / f) for f in names]
+
+    def pruned(self, prune: dict | None) -> list[str]:
+        """File names whose manifest min/max can match ``prune``."""
+        if not prune:
+            return self.files
+        stats = self.m.get("stats", {})
+        return [f for f in self.files if _file_survives(stats.get(f), prune)]
+
+    def read(
+        self, spark: SparkSession, files: list[str] | None = None,
+        schema=None, merge_schema: bool = False,
+    ) -> DataFrame | None:
+        """``files`` (default: all) through this manifest's merge-on-read
+        deletes; None when there is nothing to read."""
+        paths = self.paths(files)
+        if not paths:
+            return None
+        return _read_files_with_deletes(
+            spark, self.table, self.m, paths, schema=schema,
+            merge_schema=merge_schema,
+        )
+
+
+def _pin(path: str | Path, name: str | None = None) -> _Pin:
+    """Pin manifest ``name`` — by default CURRENT's, read once."""
+    table = Path(path)
+    if name is None:
+        name = _read_current(table)
+    if name is None:
+        return _Pin(table)
+    return _Pin(table, name, _load_manifest(table, name))
+
+
 def _stamp_ts(parent_manifest: dict | None) -> float:
     """Commit timestamp for a new manifest, clamped to be >= the
     parent's.  The AS OF resolver's newest-first "first eff <= epoch"
@@ -303,8 +446,12 @@ def _max_staged_seq(table: Path) -> int:
     mdir = table / _MANIFESTS
     if not mdir.exists():
         return -1
-    seqs = [int(p.name.split("-")[1]) for p in mdir.glob("m-*.json")]
-    return max(seqs, default=-1)
+    return max((_name_seq(p.name) for p in mdir.glob("m-*.json")), default=-1)
+
+
+def _next_commit(table: Path) -> tuple[int, str]:
+    """(seq, commit id) for a new commit staged on ``table``."""
+    return _max_staged_seq(table) + 1, uuid.uuid4().hex[:12]
 
 
 def _stage_data_files(
@@ -346,6 +493,118 @@ def _stage_data_files(
     return names, stats
 
 
+def _child(
+    base: _Pin,
+    seq: int,
+    mode: str,
+    keep: list[str],
+    new_files: list[str],
+    new_stats: dict,
+    meta: dict | None = None,
+) -> dict:
+    """The manifest of a child of ``base`` keeping the parent files
+    ``keep`` and adding ``new_files`` — the one place carry rules live
+    (the key table in the module docstring)."""
+    pm = base.m
+    pstats, pseqs = pm.get("stats", {}), pm.get("file_seqs", {})
+    m = {
+        "seq": seq,
+        "ts": _stamp_ts(pm),
+        "parent": base.name,
+        "mode": mode,
+        "files": [*keep, *new_files],
+        "stats": {
+            **{f: pstats[f] for f in keep if f in pstats},
+            **new_stats,
+        },
+        "file_seqs": {
+            **{f: pseqs.get(f, 0) for f in keep},
+            **dict.fromkeys(new_files, seq),
+        },
+    }
+    if mode in ("append", "delete", "rewrite"):
+        m.update((k, pm[k]) for k in ("schema", *_DELETE_STATE) if k in pm)
+    merged_meta = {
+        **{k: v for k, v in base.meta.items() if k in _STICKY_META},
+        **(meta or {}),
+    }
+    if merged_meta:
+        m["meta"] = merged_meta
+    batch = base.stream_batch
+    if meta and "batch_id" in meta:
+        # the exactly-once watermark only ADVANCES: a caller passing a
+        # smaller batch_id (metadata backfill) must not regress
+        # last_streamed_batch and reopen already-committed batches
+        b = int(meta["batch_id"])
+        batch = b if batch is None else max(batch, b)
+    if batch is not None:
+        m["stream_batch"] = batch
+    return m
+
+
+def _publish(table: Path, manifest: dict, commit_id: str) -> PreparedCommit:
+    """Write a child manifest durably, not yet referenced by CURRENT."""
+    seq = manifest["seq"]
+    mname = f"m-{seq:06d}-{commit_id}.json"
+    _atomic_write(table / _MANIFESTS / mname, json.dumps(manifest, indent=1))
+    return PreparedCommit(
+        table=str(table),
+        manifest_name=mname,
+        seq=seq,
+        n_files=len(manifest["files"]),
+        parent=manifest["parent"],
+    )
+
+
+def _append_schema(path: str, base: _Pin, df: DataFrame) -> dict | None:
+    """The schema an append of ``df`` onto ``base`` records, or None to
+    record none.
+
+    Fail-fast schema contract: an INCOMPATIBLY type-changing append
+    (string -> double, bigint -> string, ...) produces a table NO read
+    path can plan — plain reads hit PARQUET_COLUMN_DATA_TYPE_MISMATCH,
+    and mergeSchema refuses to merge conflicting leaf types — so reject
+    it at commit time, naming the columns, instead of bricking every
+    subsequent read.  Same-family WIDTH changes (tinyint..bigint,
+    float/double) stay legal in either direction: the manifest records
+    the WIDEST type seen, and the merge-schema read path plans the scan
+    at that declared type (Spark's parquet reader upcasts narrower
+    physical files), which is also what the snapshot STREAM source does.
+    Column ADDITIONS (and absences) stay legal: ordinary evolution.
+    Recording the commit's logical schema in the manifest is what makes
+    the check O(1) instead of a footer walk over the parent's file
+    list."""
+    new_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    if "schema" in base.m:
+        parent_schema = base.m["schema"]
+    else:
+        # pre-upgrade manifest: reconstruct the parent schema from its
+        # footers (one-time cost), or record no schema at all —
+        # recording just the append's columns would narrow every
+        # subsequent merge-schema read to them
+        parent_schema = _parent_schema_from_footers(base.table, base.files)
+        if parent_schema is None:
+            return None
+    conflicts: dict[str, tuple[str, str]] = {}
+    for c, t in new_schema.items():
+        if c in parent_schema and parent_schema[c] != t:
+            wide = _widen_type(parent_schema[c], t)
+            if wide is None:
+                conflicts[c] = (parent_schema[c], t)
+            else:
+                new_schema[c] = wide
+    if conflicts:
+        detail = ", ".join(
+            f"{c}: {old} -> {new}" for c, (old, new) in sorted(conflicts.items())
+        )
+        raise ValueError(
+            f"{path}: append changes existing column type(s) "
+            f"({detail}) — no read path can plan the mixed files; "
+            "cast the DataFrame to the table's types, or overwrite"
+        )
+    return {**parent_schema, **new_schema}
+
+
 def prepare_commit(
     df: DataFrame,
     path: str,
@@ -371,163 +630,22 @@ def prepare_commit(
     table = Path(path)
     (table / _MANIFESTS).mkdir(parents=True, exist_ok=True)
     (table / _DATA).mkdir(parents=True, exist_ok=True)
-
-    base_name = parent if parent is not None else _read_current(table)
-    parent_files: list[str] = []
-    parent_stats: dict[str, dict] = {}
-    parent_deletes: list[str] = []
-    parent_delete_keys: list[str] | None = None
-    parent_delete_schema: dict | None = None
-    parent_delete_stats: dict | None = None
-    parent_fseqs: dict[str, int] = {}
-    parent_dseqs: dict[str, int] = {}
-    stream_batch: int | None = None
-    parent_meta: dict = {}
-    pm: dict = {}
-    seq = _max_staged_seq(table) + 1
-    if base_name is not None:
-        pm = _load_manifest(table, base_name)
-        parent_meta = pm.get("meta", {})
-        # the last streamed batch id is snapshot-level state: carried
-        # across EVERY commit mode (compaction is an overwrite!), so
-        # exactly-once retry detection survives maintenance commits and
-        # vacuum — see last_streamed_batch
-        stream_batch = pm.get("stream_batch")
-        if mode == "append":
-            parent_files = list(pm["files"])
-            pf_set = set(parent_files)
-            # carry parent stats forward — files are immutable, so their
-            # footers (and thus stats) never change; re-reading them here
-            # would be wasted IO at every append
-            parent_stats = {
-                f: s for f, s in pm.get("stats", {}).items() if f in pf_set
-            }
-            # merge-on-read deletes survive appends: the delete files are
-            # part of the snapshot's logical state, not of any one commit
-            parent_deletes = list(pm.get("delete_files", []))
-            parent_delete_keys = pm.get("delete_keys")
-            parent_delete_schema = pm.get("delete_schema")
-            parent_delete_stats = pm.get("delete_stats")
-            # sequence scoping (the Iceberg idea): remember which commit
-            # added each file, so deletes only apply to files that
-            # existed when the delete committed — a key re-inserted
-            # AFTER a delete must stay visible
-            parent_fseqs = {
-                f: s for f, s in pm.get("file_seqs", {}).items() if f in pf_set
-            }
-            parent_dseqs = dict(pm.get("delete_seqs", {}))
-    elif mode == "append":
+    base = _pin(table, parent)
+    if base.name is None:
         mode = "overwrite"  # first commit: append == overwrite
-
-    # Fail-fast schema contract: an INCOMPATIBLY type-changing append
-    # (string -> double, bigint -> string, ...) produces a table NO
-    # read path can plan — plain reads hit
-    # PARQUET_COLUMN_DATA_TYPE_MISMATCH, and mergeSchema refuses to
-    # merge conflicting leaf types — so reject it at commit time,
-    # naming the columns, instead of bricking every subsequent read.
-    # Same-family WIDTH changes (tinyint..bigint, float/double) stay
-    # legal in either direction: the manifest records the WIDEST type
-    # seen, and the merge-schema read path plans the scan at that
-    # declared type (Spark's parquet reader upcasts narrower physical
-    # files), which is also what the snapshot STREAM source does.
-    # Column ADDITIONS (and absences) stay legal: ordinary evolution.
-    # Recording the commit's logical schema in the manifest is what
-    # makes the check O(1) instead of a footer walk over the parent's
-    # file list.
-    new_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    parent_schema: dict[str, str] = {}
-    record_schema = True
-    if base_name is not None and mode == "append":
-        if "schema" in pm:
-            parent_schema = pm["schema"]
-        else:
-            # pre-upgrade manifest: reconstruct the parent schema from
-            # its footers (one-time cost), or record no schema at all —
-            # recording just the append's columns would narrow every
-            # subsequent merge-schema read to them
-            reconstructed = _parent_schema_from_footers(table, parent_files)
-            if reconstructed is None:
-                record_schema = False
-            else:
-                parent_schema = reconstructed
-        merged_types: dict[str, str] = {}
-        conflicts: dict[str, tuple[str, str]] = {}
-        for c, t in new_schema.items():
-            if c in parent_schema and parent_schema[c] != t:
-                wide = _widen_type(parent_schema[c], t)
-                if wide is None:
-                    conflicts[c] = (parent_schema[c], t)
-                else:
-                    merged_types[c] = wide
-        if conflicts:
-            detail = ", ".join(
-                f"{c}: {old} -> {new}" for c, (old, new) in sorted(conflicts.items())
-            )
-            raise ValueError(
-                f"{path}: append changes existing column type(s) "
-                f"({detail}) — no read path can plan the mixed files; "
-                "cast the DataFrame to the table's types, or overwrite"
-            )
-        new_schema = {**new_schema, **merged_types}
-
-    commit_id = uuid.uuid4().hex[:12]
+    if mode == "append":
+        keep, schema = base.files, _append_schema(path, base, df)
+    else:
+        keep = []
+        schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    seq, commit_id = _next_commit(table)
     new_files, new_stats = _stage_data_files(
         df, table, commit_id, bloom_cols=bloom_cols
     )
-    stats = {**parent_stats, **new_stats}
-
-    manifest = {
-        "seq": seq,
-        "ts": _stamp_ts(pm),
-        "parent": base_name,
-        "mode": mode,
-        "files": parent_files + new_files,
-        "stats": stats,
-        # legacy manifests lack file_seqs; readers default absent files
-        # to seq 0 (every delete applies — the old, conservative rule)
-        "file_seqs": {
-            **{f: parent_fseqs.get(f, 0) for f in parent_files},
-            **{f: seq for f in new_files},
-        },
-    }
-    if record_schema:
-        manifest["schema"] = {**parent_schema, **new_schema}
-    if parent_deletes:
-        manifest["delete_files"] = parent_deletes
-        manifest["delete_keys"] = parent_delete_keys
-        if parent_delete_schema:
-            manifest["delete_schema"] = parent_delete_schema
-        if parent_delete_stats:
-            manifest["delete_stats"] = parent_delete_stats
-        manifest["delete_seqs"] = parent_dseqs
-    # refresh watermarks are snapshot-level STATE like stream_batch:
-    # a maintenance overwrite (compaction, clustering) that dropped them
-    # would silently degrade the next incremental refresh to a full
-    # reseed and break verify_aggregate's pinned-version audit
-    carried_meta = {
-        k: parent_meta[k] for k in _STICKY_META if k in parent_meta
-    }
-    merged_meta = {**carried_meta, **(meta or {})}
-    if merged_meta:
-        manifest["meta"] = merged_meta
-    if meta:
-        if "batch_id" in meta:
-            # the exactly-once watermark only ADVANCES: a caller passing
-            # a smaller batch_id (metadata backfill) must not regress
-            # last_streamed_batch and reopen already-committed batches
-            b = int(meta["batch_id"])
-            stream_batch = b if stream_batch is None else max(stream_batch, b)
-    if stream_batch is not None:
-        manifest["stream_batch"] = stream_batch
-    mname = f"m-{seq:06d}-{commit_id}.json"
-    _atomic_write(table / _MANIFESTS / mname, json.dumps(manifest, indent=1))
-    return PreparedCommit(
-        table=str(table),
-        manifest_name=mname,
-        seq=seq,
-        n_files=len(manifest["files"]),
-        parent=base_name,
-    )
+    m = _child(base, seq, mode, keep, new_files, new_stats, meta)
+    if schema is not None:
+        m["schema"] = schema
+    return _publish(table, m, commit_id)
 
 
 def commit(prepared: PreparedCommit, force: bool = False) -> None:
@@ -571,12 +689,11 @@ def delete_rows(
     table).  Time travel is preserved: older versions never reference
     the new key file, so they still show the rows."""
     table = Path(path)
-    base_name = parent if parent is not None else _read_current(table)
-    if base_name is None:
+    base = _pin(table, parent)
+    if base.name is None:
         raise ValueError(f"{path}: cannot delete from a never-committed table")
-    pm = _load_manifest(table, base_name)
     key_cols = list(df_keys.columns)
-    prev_keys = pm.get("delete_keys")
+    prev_keys = base.m.get("delete_keys")
     if prev_keys is not None and list(prev_keys) != key_cols:
         raise ValueError(
             f"{path}: delete key columns {key_cols} != existing {prev_keys}"
@@ -590,8 +707,8 @@ def delete_rows(
     #   semantics), so the delete silently removes zero rows.
     import pyarrow.parquet as _pq
 
-    for f in pm["files"]:
-        cols = set(_pq.read_schema(table / _DATA / f).names)
+    for f, fp in zip(base.files, base.paths()):
+        cols = set(_pq.read_schema(fp).names)
         missing = [k for k in key_cols if k not in cols]
         if missing:
             raise ValueError(
@@ -613,7 +730,7 @@ def delete_rows(
         lambda a, b: a | b, [F.col(c).isNull() for c in key_cols]
     )
     obs = Observation()
-    commit_id = uuid.uuid4().hex[:12]
+    seq, commit_id = _next_commit(table)
     new_dels, new_dstats = _stage_data_files(
         df_keys.observe(obs, F.sum(null_pred.cast("int")).alias("n_null")),
         table, commit_id, tag="-del", collect_stats=True,
@@ -625,16 +742,36 @@ def delete_rows(
             f"{path}: delete keys contain NULL — NULL never matches in the "
             f"anti-join, so such a delete silently removes nothing"
         )
+    m = _child(base, seq, "delete", base.files, [], {})
+    m["delete_files"] = [*m.get("delete_files", []), *new_dels]
+    m["delete_keys"] = key_cols
+    # scope: this delete applies only to files with file_seq < seq
+    # (rows that existed when it committed) — see read_snapshot
+    m["delete_seqs"] = {**m.get("delete_seqs", {}), **dict.fromkeys(new_dels, seq)}
+    # Per-key-file footer stats + row counts: lets the incremental
+    # refresh derive its retraction-scan prune bounds (and the
+    # IN-pushdown cap decision) from the MANIFEST instead of running
+    # bounds-aggregation jobs over the key frame at every refresh.
+    m["delete_stats"] = {
+        **m.get("delete_stats", {}),
+        **{
+            f: {
+                "cols": new_dstats.get(f, {}),
+                "rows": _pq.ParquetFile(table / _DATA / f).metadata.num_rows,
+            }
+            for f in new_dels
+        },
+    }
     # Record the key files' schema so readers can plan the delete-key
     # scans without a footer-inference job (one per delete-applying
     # read otherwise).  Widen against the parent's recorded key schema
     # (older key files may be narrower — the reader upcasts); on an
     # unwidenable conflict fall back to recording nothing (inference).
-    dschema: dict[str, str] | None = {
+    dschema = {
         f.name: f.dataType.simpleString() for f in df_keys.schema.fields
     }
-    parent_ds = pm.get("delete_schema")
-    if parent_ds is not None and dschema is not None:
+    parent_ds = m.pop("delete_schema", None)
+    if parent_ds is not None:
         merged_ds: dict[str, str] = {}
         for c in key_cols:
             a, b = parent_ds.get(c), dschema[c]
@@ -643,51 +780,21 @@ def delete_rows(
                 merged_ds = {}
                 break
             merged_ds[c] = wide
-        dschema = merged_ds or None
-    seq = _max_staged_seq(table) + 1
-    manifest = {
-        "seq": seq,
-        "ts": _stamp_ts(pm),
-        "parent": base_name,
-        "mode": "delete",
-        "files": list(pm["files"]),
-        "stats": pm.get("stats", {}),
-        "file_seqs": dict(pm.get("file_seqs", {})),
-        "delete_files": list(pm.get("delete_files", [])) + new_dels,
-        "delete_keys": key_cols,
-        # scope: this delete applies only to files with file_seq < seq
-        # (rows that existed when it committed) — see read_snapshot
-        "delete_seqs": {
-            **pm.get("delete_seqs", {}),
-            **{d: seq for d in new_dels},
-        },
-    }
+        dschema = merged_ds
     if dschema:
-        manifest["delete_schema"] = dschema
-    # Per-key-file footer stats + row counts: lets the incremental
-    # refresh derive its retraction-scan prune bounds (and the
-    # IN-pushdown cap decision) from the MANIFEST instead of running
-    # bounds-aggregation jobs over the key frame at every refresh.
-    dstats = dict(pm.get("delete_stats", {}))
-    for f in new_dels:
-        dstats[f] = {
-            "cols": new_dstats.get(f, {}),
-            "rows": _pq.ParquetFile(table / _DATA / f).metadata.num_rows,
-        }
-    manifest["delete_stats"] = dstats
-    if pm.get("schema"):
-        manifest["schema"] = pm["schema"]
-    if pm.get("stream_batch") is not None:
-        manifest["stream_batch"] = pm["stream_batch"]
-    mname = f"m-{seq:06d}-{commit_id}.json"
-    _atomic_write(table / _MANIFESTS / mname, json.dumps(manifest, indent=1))
-    return PreparedCommit(
-        table=str(table),
-        manifest_name=mname,
-        seq=seq,
-        n_files=len(manifest["files"]),
-        parent=base_name,
-    )
+        m["delete_schema"] = dschema
+    return _publish(table, m, commit_id)
+
+
+def _key_reader(spark: SparkSession, m: dict):
+    """Reader for ``m``'s delete-key files: planned at the manifest's
+    recorded key schema (widened over delete commits) instead of a
+    footer-inference job per read, when one is recorded."""
+    ds = m.get("delete_schema")
+    kc = m.get("delete_keys") or []
+    if ds and kc and all(c in ds for c in kc):
+        return spark.read.schema(", ".join(f"`{c}` {ds[c]}" for c in kc))
+    return spark.read
 
 
 def _read_files_with_deletes(
@@ -725,15 +832,7 @@ def _read_files_with_deletes(
     import bisect
 
     key_cols = list(m["delete_keys"])
-    # key files carry their recorded schema in the manifest (widened
-    # over delete commits): plan the key scans from it instead of a
-    # footer-inference job per read
-    ds = m.get("delete_schema")
-    kreader = (
-        spark.read.schema(", ".join(f"`{c}` {ds[c]}" for c in key_cols))
-        if ds and all(c in ds for c in key_cols)
-        else spark.read
-    )
+    kreader = _key_reader(spark, m)
     fseq = m.get("file_seqs", {})
     dseq = m.get("delete_seqs", {})
     inf = float("inf")
@@ -768,12 +867,7 @@ def read_prepared(
     read_snapshot will after the flip — otherwise a run that stages a
     delete and then reads its own staging would resurrect the deleted
     rows and bake them into downstream tables."""
-    table = Path(prepared.table)
-    m = _load_manifest(table, prepared.manifest_name)
-    files = [str(table / _DATA / f) for f in m["files"]]
-    if not files:
-        return None
-    return _read_files_with_deletes(spark, table, m, files, schema=schema)
+    return _pin(prepared.table, prepared.manifest_name).read(spark, schema=schema)
 
 
 def write_table_atomic(df: DataFrame, path: str, mode: str = "overwrite") -> PreparedCommit:
@@ -783,30 +877,12 @@ def write_table_atomic(df: DataFrame, path: str, mode: str = "overwrite") -> Pre
     return p
 
 
-def _committed_chain(table: Path) -> list[tuple[str, dict]]:
-    """(name, manifest) pairs reachable from CURRENT via parent links,
-    newest-first.  This is the COMMITTED lineage — manifests staged by a
-    crashed run are unreachable and never appear here, so time travel
-    and vacuum can't be confused by them."""
-    chain = []
-    name = _read_current(table)
-    seen: set[str] = set()
-    while name is not None and name not in seen:
-        seen.add(name)
-        try:
-            m = _load_manifest(table, name)
-        except FileNotFoundError:
-            break  # chain truncated by vacuum
-        chain.append((name, m))
-        name = m.get("parent")
-    return chain
-
-
 def history(path: str) -> list[dict]:
     """Committed versions oldest-first (the CURRENT parent chain), each
     with seq/mode/file count/commit timestamp — data files are
     immutable, so every retained entry is a readable point-in-time
     version (``ts`` is None for pre-timestamp legacy manifests)."""
+    table = Path(path)
     return [
         {
             "manifest": name,
@@ -815,91 +891,108 @@ def history(path: str) -> list[dict]:
             "n_files": len(m["files"]),
             "ts": m.get("ts"),
         }
-        for name, m in reversed(_committed_chain(Path(path)))
+        for name, m in reversed(list(_walk(table, _read_current(table))))
     ]
 
 
-def tag_snapshot(path: str, name: str, version: int | None = None) -> str:
-    """Pin a committed version under a human-stable NAME (Iceberg-style
-    tag): ``_tags/<name>`` holds the manifest filename, written with
-    the same fsync'd atomic-replace discipline as CURRENT.  Defaults to
-    the current version; pass ``version`` to tag an older retained one.
-    Tags are retention roots — :func:`vacuum` keeps a tagged manifest
-    and its data files regardless of ``keep_manifests`` — so "the
-    corpus we trained run X on" stays readable as the table moves on.
-    Re-tagging an existing name atomically moves it.  Returns the
-    pinned manifest filename."""
+# -- refs: tags and branches ------------------------------------------------
+#
+# A ref is ``_tags/<name>`` or ``_branches/<name>`` holding a manifest
+# filename, written with the same fsync'd atomic-replace discipline as
+# CURRENT.  A tag pins a version; a branch is a WRITABLE named head
+# (Iceberg-style) that commit_branch advances — so an experiment can
+# append/compact against its own lineage while main (the CURRENT
+# pointer) moves independently, and a fast-forward merge is one atomic
+# pointer flip.  Both are vacuum retention roots.
+
+
+def _is_ref_name(name: str) -> bool:
+    # ".tmp-" names are the _atomic_write temp namespace: list/vacuum
+    # treat such files as crash orphans, never refs — a ref named into it
+    # would silently disappear and lose its retention-root pin
+    return bool(_TAG_NAME_RE.match(name or "")) and ".tmp-" not in name
+
+
+def _check_ref_name(name: str, kind: str) -> None:
     if not _TAG_NAME_RE.match(name or ""):
         raise ValueError(
-            f"invalid tag name {name!r} (alnum start, then [A-Za-z0-9._-], "
-            "max 64 chars)"
+            f"invalid {kind} name {name!r} (alnum start, then "
+            "[A-Za-z0-9._-], max 64 chars)"
         )
-    if ".tmp-" in name:
-        # Reserved: _atomic_write temp suffix.  list_tags() hides such
-        # names and vacuum() sweeps stale _tags/*.tmp-* files, so a tag
-        # named into the temp namespace would silently disappear and
-        # lose its retention-root pin.
-        raise ValueError(f"invalid tag name {name!r} ('.tmp-' is reserved)")
+    if not _is_ref_name(name):
+        raise ValueError(f"invalid {kind} name {name!r} ('.tmp-' is reserved)")
+
+
+def _set_ref(
+    path: str, kind: str, name: str, version: int | None = None,
+    tag: str | None = None,
+) -> str:
+    """Point ref ``name`` at a committed version (CURRENT by default);
+    returns the manifest filename."""
+    _check_ref_name(name, kind)
     table = Path(path)
-    mname = _manifest_for(table, version)
+    mname = _resolve(table, version, tag=tag).name
     if mname is None:
-        raise FileNotFoundError(f"{path}: no committed snapshot to tag")
-    tdir = table / _TAGS
-    tdir.mkdir(parents=True, exist_ok=True)
-    _atomic_write(tdir / name, mname)
+        raise FileNotFoundError(f"{path}: no committed snapshot to {kind}")
+    rdir = table / _REF_DIRS[kind]
+    rdir.mkdir(parents=True, exist_ok=True)
+    _atomic_write(rdir / name, mname)
     return mname
 
 
-def list_tags(path: str) -> dict[str, str]:
-    """tag name → pinned manifest filename (empty if no tags)."""
-    tdir = Path(path) / _TAGS
-    if not tdir.is_dir():
+def _refs(path: str | Path, kind: str) -> dict[str, str]:
+    rdir = Path(path) / _REF_DIRS[kind]
+    if not rdir.is_dir():
         return {}
-    out: dict[str, str] = {}
-    for f in sorted(tdir.iterdir()):
-        # ".tmp-" names are crash-orphaned _atomic_write temps, not tags
-        # — they happen to match _TAG_NAME_RE ("v1.tmp-ab12cd34"), and
-        # treating one as a tag would surface a phantom name AND make
-        # vacuum() hold its manifest as a permanent retention root.
-        if f.is_file() and _TAG_NAME_RE.match(f.name) and ".tmp-" not in f.name:
-            out[f.name] = f.read_text().strip()
-    return out
+    return {
+        f.name: f.read_text().strip()
+        for f in sorted(rdir.iterdir())
+        if f.is_file() and _is_ref_name(f.name)
+    }
 
 
-def delete_tag(path: str, name: str) -> bool:
-    """Drop a tag (the pinned version becomes ordinary retention-
-    governed history).  True if the tag existed."""
-    f = Path(path) / _TAGS / name
-    if (
-        not _TAG_NAME_RE.match(name or "")
-        or ".tmp-" in name  # reserved temp namespace — never a tag
-        or not f.is_file()
-    ):
+def _drop_ref(path: str, kind: str, name: str) -> bool:
+    f = Path(path) / _REF_DIRS[kind] / name
+    if not _is_ref_name(name) or not f.is_file():
         return False
     f.unlink()
     return True
 
 
-def _resolve_tag(table: Path, tag: str) -> str:
-    tags = list_tags(str(table))
-    if tag not in tags:
-        raise FileNotFoundError(f"{table}: no tag {tag!r} (have {sorted(tags)})")
-    mname = tags[tag]
-    if not (table / _MANIFESTS / mname).is_file():
+def _ref_target(path: str | Path, kind: str, name: str) -> str:
+    refs = _refs(path, kind)
+    if name not in refs:
+        raise FileNotFoundError(f"{path}: no {kind} {name!r} (have {sorted(refs)})")
+    mname = refs[name]
+    if not (Path(path) / _MANIFESTS / mname).is_file():
         raise FileNotFoundError(
-            f"{table}: tag {tag!r} pins {mname}, which no longer exists — "
-            "was it vacuumed by an older engine version without tag roots?"
+            f"{path}: {kind} {name!r} points at {mname}, which no longer "
+            "exists — was it vacuumed by an older engine version without "
+            "ref roots?"
         )
     return mname
 
 
-# -- branches ---------------------------------------------------------------
-#
-# A branch is a WRITABLE named head (Iceberg-style): ``_branches/<name>``
-# holds a manifest filename exactly like a tag, but commit_branch advances
-# it — so an experiment can append/compact against its own lineage while
-# main (the CURRENT pointer) moves independently, and a fast-forward merge
-# is one atomic pointer flip.  Branch heads are vacuum retention roots.
+def tag_snapshot(path: str, name: str, version: int | None = None) -> str:
+    """Pin a committed version under a human-stable NAME (Iceberg-style
+    tag).  Defaults to the current version; pass ``version`` to tag an
+    older retained one.  Tags are retention roots — :func:`vacuum`
+    keeps a tagged manifest and its data files regardless of
+    ``keep_manifests`` — so "the corpus we trained run X on" stays
+    readable as the table moves on.  Re-tagging an existing name
+    atomically moves it.  Returns the pinned manifest filename."""
+    return _set_ref(path, "tag", name, version)
+
+
+def list_tags(path: str) -> dict[str, str]:
+    """tag name → pinned manifest filename (empty if no tags)."""
+    return _refs(path, "tag")
+
+
+def delete_tag(path: str, name: str) -> bool:
+    """Drop a tag (the pinned version becomes ordinary retention-
+    governed history).  True if the tag existed."""
+    return _drop_ref(path, "tag", name)
 
 
 class BranchDivergedError(RuntimeError):
@@ -910,18 +1003,6 @@ class BranchDivergedError(RuntimeError):
     apply_changes), so the engine refuses rather than guesses."""
 
 
-def _check_ref_name(name: str, kind: str) -> None:
-    if not _TAG_NAME_RE.match(name or ""):
-        raise ValueError(
-            f"invalid {kind} name {name!r} (alnum start, then "
-            "[A-Za-z0-9._-], max 64 chars)"
-        )
-    if ".tmp-" in name:
-        # reserved: the _atomic_write temp namespace (list/vacuum treat
-        # such files as crash orphans, never refs)
-        raise ValueError(f"invalid {kind} name {name!r} ('.tmp-' is reserved)")
-
-
 def create_branch(
     path: str, name: str, version: int | None = None, tag: str | None = None
 ) -> str:
@@ -929,62 +1010,28 @@ def create_branch(
     version — the current one by default, an older retained ``version``,
     or a ``tag``'s pinned version.  Returns the head manifest filename.
     The name ``main`` is reserved for the CURRENT pointer itself."""
-    _check_ref_name(name, "branch")
     if name == MAIN_BRANCH:
         raise ValueError(
             f"branch name {MAIN_BRANCH!r} is reserved (it IS the CURRENT "
             "pointer — commit() already writes it)"
         )
-    table = Path(path)
-    mname = _manifest_for(table, version, tag=tag)
-    if mname is None:
-        raise FileNotFoundError(f"{path}: no committed snapshot to branch")
-    bdir = table / _BRANCHES
-    bdir.mkdir(parents=True, exist_ok=True)
-    _atomic_write(bdir / name, mname)
-    return mname
+    return _set_ref(path, "branch", name, version, tag=tag)
 
 
 def list_branches(path: str) -> dict[str, str]:
     """branch name → head manifest filename (empty if none)."""
-    bdir = Path(path) / _BRANCHES
-    if not bdir.is_dir():
-        return {}
-    return {
-        f.name: f.read_text().strip()
-        for f in sorted(bdir.iterdir())
-        if f.is_file() and _TAG_NAME_RE.match(f.name) and ".tmp-" not in f.name
-    }
+    return _refs(path, "branch")
 
 
 def delete_branch(path: str, name: str) -> bool:
     """Drop a branch head (its manifests become ordinary retention-
     governed history).  True if the branch existed."""
-    f = Path(path) / _BRANCHES / name
-    if (
-        not _TAG_NAME_RE.match(name or "")
-        or ".tmp-" in name  # reserved temp namespace — never a branch
-        or not f.is_file()
-    ):
-        return False
-    f.unlink()
-    return True
+    return _drop_ref(path, "branch", name)
 
 
 def branch_head(path: str, name: str) -> str:
     """Head manifest filename of a branch; raises if absent/vacuumed."""
-    table = Path(path)
-    heads = list_branches(path)
-    if name not in heads:
-        raise FileNotFoundError(
-            f"{path}: no branch {name!r} (have {sorted(heads)})"
-        )
-    mname = heads[name]
-    if not (table / _MANIFESTS / mname).is_file():
-        raise FileNotFoundError(
-            f"{path}: branch {name!r} heads {mname}, which no longer exists"
-        )
-    return mname
+    return _ref_target(path, "branch", name)
 
 
 def prepare_commit_branch(
@@ -1014,29 +1061,11 @@ def commit_branch(prepared: PreparedCommit, branch: str, force: bool = False) ->
     _atomic_write(table / _BRANCHES / branch, prepared.manifest_name)
 
 
-def _chain_from(table: Path, head: str | None) -> list[tuple[str, dict]]:
-    """(name, manifest) pairs reachable from an explicit head manifest
-    via parent links, newest-first (the :func:`_committed_chain` walk
-    generalized to any ref)."""
-    chain: list[tuple[str, dict]] = []
-    name, seen = head, set()
-    while name is not None and name not in seen:
-        seen.add(name)
-        try:
-            m = _load_manifest(table, name)
-        except FileNotFoundError:
-            break  # truncated by vacuum
-        chain.append((name, m))
-        name = m.get("parent")
-    return chain
-
-
 def is_ancestor(path: str, ancestor: str, head: str) -> bool:
     """True if manifest ``ancestor`` is on ``head``'s parent chain
     (inclusive).  Conservative under vacuum: a truncated chain answers
     False, which only blocks a fast-forward, never loses data."""
-    table = Path(path)
-    return any(name == ancestor for name, _ in _chain_from(table, head))
+    return any(name == ancestor for name, _ in _walk(Path(path), head))
 
 
 def merge_base(path: str, branch: str) -> str | None:
@@ -1044,8 +1073,8 @@ def merge_base(path: str, branch: str) -> str | None:
     the merge base for divergence checks; None if the chains no longer
     intersect (vacuum truncation)."""
     table = Path(path)
-    main_chain = {name for name, _ in _chain_from(table, _read_current(table))}
-    for name, _ in _chain_from(table, branch_head(path, branch)):
+    main_chain = {name for name, _ in _walk(table, _read_current(table))}
+    for name, _ in _walk(table, branch_head(path, branch)):
         if name in main_chain:
             return name
     return None
@@ -1077,39 +1106,47 @@ def merge_branch(path: str, branch: str) -> str:
     )
 
 
+def _retention(table: Path, keep_manifests: int) -> dict[str, list[_Pin]]:
+    """The manifests :func:`vacuum` keeps, by root, disjoint with chain
+    > tag > branch precedence: the ``keep_manifests`` newest COMMITTED
+    versions (the CURRENT chain, always including CURRENT itself), then
+    every tag and branch head — retention ROOTS, so "the snapshot run X
+    trained on" and an experiment's lineage survive main-line
+    retention.  A ref to an already-vacuumed manifest (older engine,
+    manual deletion) is skipped rather than fatal: vacuum must still be
+    able to run."""
+    chain = list(_walk(table, _read_current(table)))[: max(keep_manifests, 1)]
+    kept = {"kept_chain": [_Pin(table, n, m) for n, m in chain]}
+    seen = {n for n, _ in chain}
+    for kind in ("tag", "branch"):
+        kept[f"kept_{kind}"] = pins = []
+        for mname in _refs(table, kind).values():
+            if mname in seen or not (table / _MANIFESTS / mname).is_file():
+                continue
+            seen.add(mname)
+            pins.append(_pin(table, mname))
+    return kept
+
+
 def vacuum_plan(path: str, keep_manifests: int = 2) -> dict[str, list[str]]:
     """Dry-run of :func:`vacuum`'s MANIFEST retention: which manifest
     files the chain window, tag roots, and branch roots each pin, and
     which are removable (older chain entries plus crash-staged
-    orphans).  Categories are disjoint with chain > tag > branch
-    precedence; nothing is deleted."""
+    orphans).  Nothing is deleted."""
     table = Path(path)
     mdir = table / _MANIFESTS
     if not mdir.exists():
         return {"kept_chain": [], "kept_tag": [], "kept_branch": [],
                 "removable": []}
-    chain = _committed_chain(table)
-    kept_chain = [name for name, _ in chain[: max(keep_manifests, 1)]]
-    seen = set(kept_chain)
-    kept_tag = []
-    for _t, mname in sorted(list_tags(str(table)).items()):
-        if mname not in seen and (mdir / mname).is_file():
-            kept_tag.append(mname)
-            seen.add(mname)
-    kept_branch = []
-    for _b, mname in sorted(list_branches(str(table)).items()):
-        if mname not in seen and (mdir / mname).is_file():
-            kept_branch.append(mname)
-            seen.add(mname)
-    removable = sorted(
+    plan = {
+        cat: [p.name for p in pins]
+        for cat, pins in _retention(table, keep_manifests).items()
+    }
+    seen = {n for names in plan.values() for n in names}
+    plan["removable"] = sorted(
         p.name for p in mdir.glob("m-*.json") if p.name not in seen
     )
-    return {
-        "kept_chain": kept_chain,
-        "kept_tag": kept_tag,
-        "kept_branch": kept_branch,
-        "removable": removable,
-    }
+    return plan
 
 
 def _as_epoch(as_of) -> float:
@@ -1129,62 +1166,179 @@ def _as_epoch(as_of) -> float:
     raise TypeError(f"as_of: expected epoch/datetime/ISO string, got {as_of!r}")
 
 
-def _manifest_for(
-    table: Path, version: int | None, as_of=None, tag: str | None = None,
-    branch: str | None = None,
-) -> str | None:
+def _resolve(
+    table: Path, version: int | None = None, as_of=None,
+    tag: str | None = None, branch: str | None = None,
+) -> _Pin:
+    """Pin the manifest a read addresses: CURRENT by default, else a
+    ``version`` seq, an ``as_of`` instant, a ``tag`` or a ``branch``."""
     if sum(x is not None for x in (version, as_of, tag, branch)) > 1:
         raise ValueError("pass version OR as_of OR tag OR branch, not several")
     if branch is not None:
-        return branch_head(str(table), branch)
+        return _pin(table, _ref_target(table, "branch", branch))
     if tag is not None:
-        return _resolve_tag(table, tag)
-    if as_of is not None:
-        # newest committed manifest staged at-or-before the instant;
-        # chain timestamps are monotone (enforced at stamping time by
-        # _stamp_ts).  A ts-less (legacy) manifest has an unknown
-        # instant; it is bounded from BELOW by chain order (it was
-        # committed after every manifest beneath it, so its effective
-        # ts is at least the newest stamped ts at-or-below) and
-        # estimated from ABOVE by its manifest file's mtime (manifests
-        # are write-once, so mtime ~ commit time; a copied/touched file
-        # inflates the estimate, which only makes resolution MORE
-        # conservative — it skips to an older ancestor, never returns
-        # future data for a historical instant).  eff = max(mtime, lb):
-        # the mtime estimate clamped up to the chain-order bound.
-        epoch = _as_epoch(as_of)
-        chain = _committed_chain(table)
-        below_max: list[float | None] = []
-        cur: float | None = None
-        for _name, m in reversed(chain):  # oldest-first accumulation
-            ts = m.get("ts")
-            if ts is not None:
-                cur = float(ts) if cur is None else max(cur, float(ts))
-            below_max.append(cur)
-        below_max.reverse()
-        for (name, m), lb in zip(chain, below_max):
-            ts = m.get("ts")
-            if ts is not None:
-                eff = float(ts)
-            else:
-                try:
-                    mtime = (table / _MANIFESTS / name).stat().st_mtime
-                except OSError:
-                    mtime = float("-inf")
-                eff = max(mtime, lb if lb is not None else float("-inf"))
-            if eff <= epoch:
-                return name
+        return _pin(table, _ref_target(table, "tag", tag))
+    if version is None and as_of is None:
+        return _pin(table)
+    if version is not None:
+        for name, m in _walk(table, _read_current(table)):
+            if int(m["seq"]) == version:
+                return _Pin(table, name, m)
         raise FileNotFoundError(
-            f"no committed snapshot of {table} at or before {as_of!r} "
-            "(table did not exist yet, or the manifest was vacuumed)"
+            f"no committed manifest for version {version} in {table} (vacuumed?)"
         )
-    if version is None:
-        return _read_current(table)
-    for name, m in _committed_chain(table):
-        if int(m["seq"]) == version:
-            return name
+    # newest committed manifest staged at-or-before the instant; chain
+    # timestamps are monotone (enforced at stamping time by _stamp_ts).
+    # A ts-less (legacy) manifest has an unknown instant; it is bounded
+    # from BELOW by chain order (it was committed after every manifest
+    # beneath it, so its effective ts is at least the newest stamped ts
+    # at-or-below) and estimated from ABOVE by its manifest file's mtime
+    # (manifests are write-once, so mtime ~ commit time; a
+    # copied/touched file inflates the estimate, which only makes
+    # resolution MORE conservative — it skips to an older ancestor,
+    # never returns future data for a historical instant).
+    # eff = max(mtime, lb): the mtime estimate clamped up to the
+    # chain-order bound.
+    epoch = _as_epoch(as_of)
+    chain = list(_walk(table, _read_current(table)))
+    below_max: list[float | None] = []
+    cur: float | None = None
+    for _name, m in reversed(chain):  # oldest-first accumulation
+        ts = m.get("ts")
+        if ts is not None:
+            cur = float(ts) if cur is None else max(cur, float(ts))
+        below_max.append(cur)
+    below_max.reverse()
+    for (name, m), lb in zip(chain, below_max):
+        ts = m.get("ts")
+        if ts is not None:
+            eff = float(ts)
+        else:
+            try:
+                mtime = (table / _MANIFESTS / name).stat().st_mtime
+            except OSError:
+                mtime = float("-inf")
+            eff = max(mtime, lb if lb is not None else float("-inf"))
+        if eff <= epoch:
+            return _Pin(table, name, m)
     raise FileNotFoundError(
-        f"no committed manifest for version {version} in {table} (vacuumed?)"
+        f"no committed snapshot of {table} at or before {as_of!r} "
+        "(table did not exist yet, or the manifest was vacuumed)"
+    )
+
+
+def _window(
+    table: Path, since: int, upto: int | None = None
+) -> tuple[_Pin, _Pin] | None:
+    """Both ends of the version window (``since``, ``upto``] resolved in
+    ONE walk from CURRENT — a per-end resolve would re-walk the chain
+    per end (O(chain²) over a stream's life).  ``upto`` None is CURRENT
+    itself; ``since`` < 0 is the empty pre-table state (a stream's
+    initial offset).  None when the table has never committed; a
+    vacuumed or unknown version raises FileNotFoundError — the error a
+    restarted checkpoint hits when its start version aged out."""
+    head = _read_current(table)
+    if head is None:
+        return None
+    want = {v for v in (since, upto) if v is not None and v >= 0}
+    pins: dict[int | None, _Pin] = {}
+    for name, m in _walk(table, head):
+        pin = _Pin(table, name, m)
+        pins.setdefault(None, pin)  # the walk starts at CURRENT
+        if pin.seq in want:
+            pins.setdefault(pin.seq, pin)
+        if want <= pins.keys():
+            break
+    missing = sorted(want - pins.keys())
+    if missing:
+        raise FileNotFoundError(
+            f"{table}: no committed manifest for version(s) {missing} "
+            "(vacuumed, or never committed)"
+        )
+    def at(v: int | None) -> _Pin:
+        return _Pin(table) if v is not None and v < 0 else pins[v]
+
+    return at(since), at(upto)
+
+
+def _added(old: _Pin, new: _Pin) -> tuple[list[str], list[str]]:
+    """(data files, delete files) ``new`` adds over its ancestor ``old``
+    — valid because data files are immutable and append and delete
+    commits only extend the parent's lists.  An overwrite or compaction
+    breaks that containment, and the window raises rather than
+    silently double-processing: consume the full snapshot instead (a
+    stream restarts from a fresh checkpoint)."""
+    for kind, a, b in (
+        ("append", old.files, new.files),
+        ("delete", old.deletes, new.deletes),
+    ):
+        if not set(a) <= set(b):
+            raise ValueError(
+                f"{new.table}: version {old.seq} is not an {kind}-ancestor "
+                f"of version {new.seq} (an overwrite or compaction "
+                "intervened) — consume the full snapshot instead, or "
+                "restart a stream from a fresh checkpoint"
+            )
+    old_files, old_dels = set(old.files), set(old.deletes)
+    return (
+        [f for f in new.files if f not in old_files],
+        [d for d in new.deletes if d not in old_dels],
+    )
+
+
+def _increment(
+    table: Path, since: int, upto: int | None
+) -> tuple[_Pin, list[str], list[str]] | None:
+    """(window-end pin, added data files, added delete files) for the
+    (``since``, ``upto``] window; None if the table never committed."""
+    w = _window(table, since, upto)
+    if w is None:
+        return None
+    return (w[1], *_added(*w))
+
+
+def _read_keys(spark: SparkSession, pin: _Pin, dels: list[str]) -> DataFrame | None:
+    return _key_reader(spark, pin.m).parquet(*pin.paths(dels)) if dels else None
+
+
+def _delete_stats(pin: _Pin, dels: list[str]) -> tuple[int, dict] | None:
+    """(row count, per-column [lo, hi]) over key files ``dels`` from
+    ``pin``'s recorded footer stats; None if empty or unrecorded."""
+    dstats = pin.m.get("delete_stats", {})
+    if not dels or not all(f in dstats for f in dels):
+        return None  # empty window, or legacy key files without stats
+    n = 0
+    lo: dict[str, object] = {}
+    hi: dict[str, object] = {}
+    seen_all: set[str] | None = None
+    for f in dels:
+        rows = int(dstats[f].get("rows", 0))
+        n += rows
+        if rows == 0:
+            continue  # an empty key file constrains nothing
+        cols = dstats[f].get("cols", {})
+        present = set(cols)
+        seen_all = present if seen_all is None else (seen_all & present)
+        for c, (mn, mx) in cols.items():
+            lo[c] = mn if c not in lo else min(lo[c], mn)
+            hi[c] = mx if c not in hi else max(hi[c], mx)
+    return n, {c: (lo[c], hi[c]) for c in (seen_all or set())}
+
+
+def _window_reads(
+    spark: SparkSession, path: str, since: int, upto: int | None,
+    schema=None, merge_schema: bool = False,
+) -> tuple[DataFrame | None, DataFrame | None, tuple[int, dict] | None]:
+    """(:func:`read_increment`, :func:`read_delete_increment`,
+    :func:`delete_increment_stats`) of one window from ONE resolution."""
+    inc = _increment(Path(path), since, upto)
+    if inc is None:
+        return None, None, None
+    pin, files, dels = inc
+    return (
+        pin.read(spark, files, schema=schema, merge_schema=merge_schema),
+        _read_keys(spark, pin, dels),
+        _delete_stats(pin, dels),
     )
 
 
@@ -1215,23 +1369,15 @@ def snapshot_files(
     algebra, size planning), never row contents; row reads go through
     :func:`read_snapshot`, which applies the delete files.  ``as_of``
     as in :func:`read_snapshot` (time travel by instant)."""
-    table = Path(path)
-    name = _manifest_for(table, version, as_of=as_of, tag=tag, branch=branch)
-    if name is None:
-        return []
-    m = _load_manifest(table, name)
-    if m.get("delete_files") and not allow_deletes:
+    pin = _resolve(Path(path), version, as_of=as_of, tag=tag, branch=branch)
+    if pin.deletes and not allow_deletes:
         raise ValueError(
             f"{path}: snapshot carries merge-on-read deletes — reading "
             "these file paths directly would resurrect deleted rows; "
             "use read_snapshot(), or pass allow_deletes=True if only "
             "the file names/sizes are needed"
         )
-    files = m["files"]
-    if prune:
-        stats = m.get("stats", {})
-        files = [f for f in files if _file_survives(stats.get(f), prune)]
-    return [str(table / _DATA / f) for f in files]
+    return pin.paths(pin.pruned(prune))
 
 
 def read_snapshot(
@@ -1265,25 +1411,13 @@ def read_snapshot(
     :func:`tag_snapshot` — tags are vacuum retention roots, so a
     tagged read outlives the retention window.  ``branch`` (exclusive
     with all three) reads a branch's HEAD — see :func:`create_branch`;
-    branch heads are vacuum retention roots like tags."""
-    table = Path(path)
-    name = _manifest_for(table, version, as_of=as_of, tag=tag, branch=branch)
-    if name is None:
-        return None
-    m = _load_manifest(table, name)  # ONE load; snapshot_files would re-walk
-    files = m["files"]
-    if prune:
-        fstats = m.get("stats", {})
-        files = [f for f in files if _file_survives(fstats.get(f), prune)]
-    if not files:
-        return None
-    paths = [str(table / _DATA / f) for f in files]
-    # merge-on-read deletes: seq-scoped anti-joins against the
-    # manifest's key files — broadcast hash antis at scale (delete sets
-    # are delta-sized), and only for snapshots that actually carry
-    # deletes; see _read_files_with_deletes for the scoping rule
-    return _read_files_with_deletes(
-        spark, table, m, paths, schema=schema, merge_schema=merge_schema
+    branch heads are vacuum retention roots like tags.
+
+    Merge-on-read deletes apply as seq-scoped anti-joins against the
+    manifest's key files (see _read_files_with_deletes)."""
+    pin = _resolve(Path(path), version, as_of=as_of, tag=tag, branch=branch)
+    return pin.read(
+        spark, pin.pruned(prune), schema=schema, merge_schema=merge_schema
     )
 
 
@@ -1318,33 +1452,16 @@ def read_increment(
     ∪ these rows — retract FIRST, then add.  (Window deletes always
     apply to every pre-window file, and scoping exempts the new files
     from pre-window deletes, so the two pieces partition exactly.)
+
+    ``merge_schema``: schema-evolving appends inside the window would
+    otherwise be planned from one footer and silently drop the new
+    columns from the increment.
     """
-    table = Path(path)
-    # resolve the window-end manifest ONCE: a second CURRENT read here
-    # (the old snapshot_files + _manifest_for pair) let a commit land in
-    # between, mixing manifest X's file window with manifest Y's delete
-    # set — the exact race the docstring tells CALLERS to avoid
-    cur_name = _manifest_for(table, upto_version)
-    if cur_name is None:
+    inc = _increment(Path(path), since_version, upto_version)
+    if inc is None:
         return None
-    m = _load_manifest(table, cur_name)
-    cur_files = {str(table / _DATA / f) for f in m["files"]}
-    old_files = set(snapshot_files(path, since_version, allow_deletes=True))
-    if not old_files <= cur_files:
-        raise ValueError(
-            f"version {since_version} is not an append-ancestor of the "
-            f"window-end snapshot (an overwrite or compaction intervened) "
-            f"— consume the full snapshot instead"
-        )
-    new_files = sorted(cur_files - old_files)
-    if not new_files:
-        return None
-    # merge_schema: schema-evolving appends inside the window would
-    # otherwise be planned from one footer and silently drop the new
-    # columns from the increment (the compact_snapshot guard, here too)
-    return _read_files_with_deletes(
-        spark, table, m, new_files, schema=schema, merge_schema=merge_schema
-    )
+    pin, files, _dels = inc
+    return pin.read(spark, files, schema=schema, merge_schema=merge_schema)
 
 
 def read_delete_increment(
@@ -1363,32 +1480,8 @@ def read_delete_increment(
     materializes deletes into the data files and clears the key-file
     list, which breaks delta containment — full-snapshot consumption is
     the answer there too."""
-    table = Path(path)
-    cur_name = _manifest_for(table, upto_version)
-    if cur_name is None:
-        return None  # never committed — BEFORE the version walk raises
-    old_name = _manifest_for(table, since_version)
-    cur_m = _load_manifest(table, cur_name)
-    old_m = _load_manifest(table, old_name)
-    cur_d = list(cur_m.get("delete_files", []))
-    old_d = set(old_m.get("delete_files", []))
-    if not old_d <= set(cur_d):
-        raise ValueError(
-            f"version {since_version} is not a delete-ancestor of the "
-            f"live snapshot (compaction materialized deletes) — "
-            f"consume the full snapshot instead"
-        )
-    new_d = sorted(set(cur_d) - old_d)
-    if not new_d:
-        return None
-    ds = cur_m.get("delete_schema")
-    kc = cur_m.get("delete_keys") or []
-    reader = (
-        spark.read.schema(", ".join(f"`{c}` {ds[c]}" for c in kc))
-        if ds and kc and all(c in ds for c in kc)
-        else spark.read
-    )
-    return reader.parquet(*[str(table / _DATA / f) for f in new_d])
+    inc = _increment(Path(path), since_version, upto_version)
+    return None if inc is None else _read_keys(spark, inc[0], inc[2])
 
 
 def delete_increment_stats(
@@ -1402,38 +1495,28 @@ def delete_increment_stats(
     never tighter than the data — exactly the prune contract).  None
     when the window is empty or any window file predates stats
     recording (callers fall back to aggregating the key frame)."""
-    table = Path(path)
-    cur_name = _manifest_for(table, upto_version)
-    if cur_name is None:
-        return None
-    old_name = _manifest_for(table, since_version)
-    cur_m = _load_manifest(table, cur_name)
-    old_m = _load_manifest(table, old_name)
-    new_d = sorted(
-        set(cur_m.get("delete_files", [])) - set(old_m.get("delete_files", []))
-    )
-    if not new_d:
-        return None
-    dstats = cur_m.get("delete_stats", {})
-    if not all(f in dstats for f in new_d):
-        return None  # legacy key files without recorded stats
-    n = 0
-    lo: dict[str, object] = {}
-    hi: dict[str, object] = {}
-    seen_all: set[str] | None = None
-    for f in new_d:
-        rows = int(dstats[f].get("rows", 0))
-        n += rows
-        if rows == 0:
-            continue  # an empty key file constrains nothing
-        cols = dstats[f].get("cols", {})
-        present = set(cols)
-        seen_all = present if seen_all is None else (seen_all & present)
-        for c, (mn, mx) in cols.items():
-            lo[c] = mn if c not in lo else min(lo[c], mn)
-            hi[c] = mx if c not in hi else max(hi[c], mx)
-    bounds = {c: (lo[c], hi[c]) for c in (seen_all or set())}
-    return n, bounds
+    inc = _increment(Path(path), since_version, upto_version)
+    return None if inc is None else _delete_stats(inc[0], inc[2])
+
+
+def _commit_onto(
+    df: DataFrame, path: str, base: str | None, what: str,
+    mode: str = "overwrite", meta: dict | None = None,
+) -> PreparedCommit:
+    """Stage ``df`` onto the pinned ``base`` manifest and publish it —
+    every read-modify-write (compaction, merges, view maintenance)
+    commits through here.  Closes the first-commit race too: a non-None
+    base is guarded by commit()'s parent check, but a None base means
+    "use CURRENT" to prepare_commit, so a writer that committed
+    meanwhile must be caught here instead of silently clobbered."""
+    p = prepare_commit(df, path, mode=mode, meta=meta, parent=base)
+    if base is None and p.parent is not None:
+        raise SnapshotConflictError(
+            f"{path}: table committed concurrently during {what} — "
+            "re-run against the new snapshot"
+        )
+    commit(p)
+    return p
 
 
 def compact_snapshot(
@@ -1457,19 +1540,14 @@ def compact_snapshot(
     their manifest min/max spans the whole keyspace and prunes nothing;
     periodic clustered compaction is what keeps the stats selective on
     an append-heavy table."""
-    table = Path(path)
     # pin the base manifest ONCE and chain the prepare onto it: reading
     # CURRENT here and letting prepare_commit re-read it later opens a
     # read-modify-write window — a stream batch committing in between
     # would pass the conflict check yet vanish under the overwrite
-    base = _read_current(table)
-    if base is None:
+    base = _pin(path)
+    if not base.files:
         raise FileNotFoundError(f"nothing to compact: {path} has no snapshot")
-    m = _load_manifest(table, base)
-    files = [str(table / _DATA / f) for f in m["files"]]
-    if not files:
-        raise FileNotFoundError(f"nothing to compact: {path} has no snapshot")
-    total = sum(os.path.getsize(f) for f in files)
+    total = sum(os.path.getsize(f) for f in base.paths())
     n = max(1, -(-total // target_file_bytes))  # ceil
     # read through the pinned manifest (NOT the raw files): merge-on-read
     # deletes must be applied here, or the overwrite would resurrect
@@ -1478,9 +1556,7 @@ def compact_snapshot(
     # merge_schema: append commits may have EVOLVED the schema; reading
     # from one footer would silently drop the evolved columns from the
     # rewrite — permanent loss once vacuum ages the old manifests out
-    df = _read_files_with_deletes(
-        spark, table, m, files, merge_schema=True
-    )
+    df = base.read(spark, merge_schema=True)
     if cluster_by is None:
         df = df.coalesce(n)
     elif len(cluster_by) == 1:
@@ -1491,9 +1567,7 @@ def compact_snapshot(
         from ght2dm_spark.operators.layout import zorder_layout
 
         df = zorder_layout(df, cluster_by, n)
-    p = prepare_commit(df, path, mode="overwrite", parent=base)
-    commit(p)
-    return p
+    return _commit_onto(df, path, base.name, "compaction")
 
 
 def rewrite_small_files(
@@ -1527,64 +1601,25 @@ def rewrite_small_files(
     detect the broken append-containment across this commit and raise,
     exactly as they do for full compaction."""
     table = Path(path)
-    base = _read_current(table)
-    if base is None:
+    base = _pin(table)
+    if base.name is None:
         raise FileNotFoundError(f"nothing to rewrite: {path} has no snapshot")
-    m = _load_manifest(table, base)
-    sizes = {f: os.path.getsize(table / _DATA / f) for f in m["files"]}
-    small = [f for f in m["files"] if sizes[f] < small_bytes]
+    sizes = dict(zip(base.files, map(os.path.getsize, base.paths())))
+    small = [f for f in base.files if sizes[f] < small_bytes]
     if len(small) < 2:
         return None
     small_set = set(small)
-    kept = [f for f in m["files"] if f not in small_set]
-    kept_set = set(kept)
-
-    df = _read_files_with_deletes(
-        spark, table, m, [str(table / _DATA / f) for f in small],
-        schema=schema,
+    kept = [f for f in base.files if f not in small_set]
+    df = base.read(
+        spark, small, schema=schema,
         # same reason as compact_snapshot: evolved columns must survive
         merge_schema=schema is None,
     )
     n = max(1, -(-sum(sizes[f] for f in small) // target_file_bytes))  # ceil
-    df = df.coalesce(n)
-
-    seq = _max_staged_seq(table) + 1
-    commit_id = uuid.uuid4().hex[:12]
-    new_files, new_stats = _stage_data_files(df, table, commit_id)
-    stats = {
-        **{f: s for f, s in m.get("stats", {}).items() if f in kept_set},
-        **new_stats,
-    }
-
-    parent_fseqs = m.get("file_seqs", {})
-    manifest = {
-        "seq": seq,
-        "ts": _stamp_ts(m),
-        "parent": base,
-        "mode": "rewrite",
-        "files": kept + new_files,
-        "stats": stats,
-        "file_seqs": {
-            **{f: parent_fseqs.get(f, 0) for f in kept},
-            **{f: seq for f in new_files},
-        },
-    }
-    for carried in (
-        "delete_files", "delete_keys", "delete_seqs", "delete_schema",
-        "delete_stats", "schema",
-    ):
-        if carried in m:
-            manifest[carried] = m[carried]
-    if m.get("stream_batch") is not None:
-        manifest["stream_batch"] = m["stream_batch"]
-    mname = f"m-{seq:06d}-{commit_id}.json"
-    _atomic_write(table / _MANIFESTS / mname, json.dumps(manifest, indent=1))
-    p = PreparedCommit(
-        table=str(table),
-        manifest_name=mname,
-        seq=seq,
-        n_files=len(manifest["files"]),
-        parent=base,
+    seq, commit_id = _next_commit(table)
+    new_files, new_stats = _stage_data_files(df.coalesce(n), table, commit_id)
+    p = _publish(
+        table, _child(base, seq, "rewrite", kept, new_files, new_stats), commit_id
     )
     commit(p)
     return p
@@ -1601,15 +1636,11 @@ def last_streamed_batch(path: str) -> int | None:
     chain walk for legacy tables without the field; batches staged by a
     crashed micro-batch (prepared, never flipped) stay invisible either
     way — exactly the property idempotent retry needs."""
-    table = Path(path)
-    name = _read_current(table)
-    if name is None:
-        return None
-    m = _load_manifest(table, name)
-    if "stream_batch" in m:
-        return int(m["stream_batch"])
+    base = _pin(path)
+    if base.stream_batch is not None:
+        return int(base.stream_batch)
     best: int | None = None
-    for _, mm in _committed_chain(table):
+    for _, mm in _walk(base.table, base.name):
         b = mm.get("meta", {}).get("batch_id")
         if b is not None and (best is None or int(b) > best):
             best = int(b)
@@ -1686,14 +1717,8 @@ def apply_changes(
     # compact_snapshot rationale: state read and conflict-check base
     # must be the same snapshot, or a commit landing between them is
     # silently erased by the merged overwrite
-    table = Path(path)
-    base = _read_current(table)
-    state = None
-    if base is not None:
-        bm = _load_manifest(table, base)
-        bfiles = [str(table / _DATA / f) for f in bm["files"]]
-        if bfiles:
-            state = _read_files_with_deletes(spark, table, bm, bfiles)
+    base = _pin(path)
+    state = base.read(spark)
     if state is None:
         merged = latest.where(F.col(op_col) != "D").select(*payload)
     else:
@@ -1708,16 +1733,7 @@ def apply_changes(
         merged = untouched.unionByName(
             newer.where(F.col(op_col) != "D").select(*payload)
         )
-    p = prepare_commit(merged, path, mode="overwrite", parent=base)
-    if base is None and p.parent is not None:
-        # never-committed race: prepare re-resolved CURRENT (parent=None
-        # means "use CURRENT") and another writer got there first
-        raise SnapshotConflictError(
-            f"{path}: table committed concurrently during first merge — "
-            "re-run apply_changes against the new snapshot"
-        )
-    commit(p)
-    return p
+    return _commit_onto(merged, path, base.name, "the first merge")
 
 
 def cdc_sink(path: str, key_cols: list[str], order_col: str, op_col: str = "op"):
@@ -1755,33 +1771,12 @@ def vacuum(path: str, keep_manifests: int = 2) -> int:
     mdir = table / _MANIFESTS
     if not mdir.exists():
         return 0
-    chain = _committed_chain(table)
-    keep = chain[: max(keep_manifests, 1)] if chain else []
-    keep_names = {name for name, _ in keep}
-    # tags are retention ROOTS: a tagged manifest (and its files) stays
-    # readable regardless of chain depth — "the snapshot run X trained
-    # on" must survive routine retention.  A tag pointing at an
-    # already-vacuumed manifest (older engine, manual deletion) is
-    # skipped rather than fatal: vacuum must still be able to run.
-    for _ref, mname in (
-        *list_tags(str(table)).items(),
-        # branch HEADS are retention roots exactly like tags: an
-        # experiment's lineage must survive main-line retention (older
-        # branch ancestors remain ordinary history — further branch
-        # commits only need the head)
-        *list_branches(str(table)).items(),
-    ):
-        if mname in keep_names:
-            continue
-        try:
-            keep.append((mname, _load_manifest(table, mname)))
-            keep_names.add(mname)
-        except FileNotFoundError:
-            pass
+    keep = [p for pins in _retention(table, keep_manifests).values() for p in pins]
+    keep_names = {p.name for p in keep}
     live: set[str] = set()
-    for _, m in keep:
-        live.update(m["files"])
-        live.update(m.get("delete_files", []))
+    for p in keep:
+        live.update(p.files)
+        live.update(p.deletes)
     removed = 0
     for f in (table / _DATA).glob("*.parquet"):
         if f.name not in live:

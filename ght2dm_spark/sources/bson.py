@@ -29,6 +29,7 @@ from __future__ import annotations
 import re
 import struct
 from collections.abc import Iterator
+from datetime import date
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +37,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 FILE_DATE_RE = re.compile(r"(\d{4}-\d{2}-\d{2})")
+
+
+def dump_date(name: str) -> date | None:
+    """The date a dump file NAME carries: its first ``YYYY-MM-DD`` token
+    (unanchored, like the reference's ``ght2dm.go:1023``).  None when
+    there is no such token, or when it is not a real calendar date — a
+    foreign '9999-99-99' file is skipped like an undated one, never a
+    job-fatal parse error."""
+    m = FILE_DATE_RE.search(name)
+    if m is None:
+        return None
+    try:
+        return date.fromisoformat(m.group(1))
+    except ValueError:
+        return None
 
 # BSON element types the reference's structs need; sizes for skippables.
 _T_DOUBLE = 0x01
@@ -240,9 +256,10 @@ def read_bson_dumps(
             # dicts + the DataFrame simultaneously — per-file yields
             # bound resident memory to one file's rows.
             for _, r in pdf.iterrows():
+                fdate = dump_date(r["path"].rsplit("/", 1)[-1])
+                if fdate is None:
+                    continue
                 rows = []
-                m = FILE_DATE_RE.search(r["path"].rsplit("/", 1)[-1])
-                fdate = pd.Timestamp(m.group(1)).date()
                 pos = 0
                 # Lazy frame iteration: frames before a corrupt one still
                 # import (the reference reads sequentially and fails only

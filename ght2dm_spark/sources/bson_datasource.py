@@ -46,6 +46,7 @@ from ght2dm_spark.sources.bson import (
     FILE_DATE_RE,
     BsonError,
     build_doc_row,
+    dump_date,
     stream_frames,
 )
 
@@ -109,15 +110,8 @@ class BsonDumpReader(DataSourceReader):
         # a job-fatal driver exception on an otherwise-valid directory).
         parts = []
         for fname in sorted(os.listdir(self.path)):
-            if not fname.endswith(".bson"):
-                continue
-            m = FILE_DATE_RE.search(fname)
-            if not m:
-                continue
-            try:
-                y, mo, d = (int(x) for x in m.group(1).split("-"))
-                fdate = date(y, mo, d)
-            except ValueError:
+            fdate = dump_date(fname) if fname.endswith(".bson") else None
+            if fdate is None:
                 continue
             parts.append(
                 BsonFilePartition(os.path.join(self.path, fname), fdate)

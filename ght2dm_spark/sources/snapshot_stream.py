@@ -37,11 +37,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ght2dm_spark.snapshots import (
-    _DATA,
-    _load_manifest,
-    _read_current,
-)
+from ght2dm_spark.snapshots import _added, _current, _pin, _window
 
 
 class SnapshotFilePartition(InputPartition):
@@ -49,61 +45,6 @@ class SnapshotFilePartition(InputPartition):
         self.path = path
         self.columns = columns
         self.arrow_schema = arrow_schema  # pyarrow.Schema — picklable
-
-
-def _files_at(m: dict | None) -> list[str]:
-    return list(m["files"]) if m is not None else []
-
-
-def _deletes_at(m: dict | None) -> list[str]:
-    return list(m.get("delete_files", [])) if m is not None else []
-
-
-def _current_seq(table: Path) -> int:
-    """seq of CURRENT from the manifest NAME alone (m-{seq:06d}-{id});
-    no manifest JSON load — this runs every trigger."""
-    name = _read_current(table)
-    if name is None:
-        return -1
-    return int(name.split("-")[1])
-
-
-def _manifests_at(
-    table: Path, seqs: list[int]
-) -> dict[int, tuple[str, dict] | None]:
-    """Committed (name, manifest) pairs for ``seqs`` in ONE chain walk
-    from CURRENT (each step loads one manifest; a naive per-seq resolve
-    would re-walk the whole chain per seq — O(chain²) over a stream's
-    life).  seq -1 maps to None (the pre-table state).  A
-    vacuumed/unknown version raises FileNotFoundError — the error a
-    restarted checkpoint hits when its start version aged out.  A parent
-    CYCLE (hand-edited/corrupt manifest) raises instead of wedging the
-    streaming driver in an infinite walk every trigger — the same guard
-    snapshots._committed_chain carries."""
-    want = {s for s in seqs if s >= 0}
-    out: dict[int, tuple[str, dict] | None] = {
-        s: None for s in seqs if s < 0
-    }
-    name = _read_current(table)
-    seen: set[str] = set()
-    while name is not None and want:
-        if name in seen:
-            raise ValueError(
-                f"{table}: manifest parent cycle at {name!r} — the chain "
-                "is corrupt; restore CURRENT from a good manifest"
-            )
-        seen.add(name)
-        m = _load_manifest(table, name)
-        if m["seq"] in want:
-            out[m["seq"]] = (name, m)
-            want.discard(m["seq"])
-        name = m.get("parent")
-    if want:
-        raise FileNotFoundError(
-            f"{table}: no committed manifest for version(s) {sorted(want)} "
-            f"(vacuumed, or never committed)"
-        )
-    return out
 
 
 class SnapshotStreamDataSource(DataSource):
@@ -122,11 +63,8 @@ class SnapshotStreamDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("ght2dm_snapshot requires a load(path)")
-        table = Path(path)
-        name = _read_current(table)
-        m = _load_manifest(table, name) if name is not None else None
-        files = _files_at(m)
-        if not files:
+        base = _pin(path)
+        if not base.files:
             raise ValueError(f"{path}: no committed snapshot to stream")
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -138,9 +76,9 @@ class SnapshotStreamDataSource(DataSource):
         # schema at #commits footer opens instead of #files — an
         # append-heavy table with 10⁴ small files otherwise spends
         # minutes of serial driver I/O on every stream (re)start
-        reps = {f.rsplit("-", 1)[0]: f for f in files}
+        reps = {f.rsplit("-", 1)[0]: f for f in base.files}
         sch = pa.unify_schemas(
-            [pq.read_schema(str(table / _DATA / f)) for f in reps.values()],
+            [pq.read_schema(p) for p in base.paths(list(reps.values()))],
             promote_options="permissive",
         )
         return from_arrow_schema(sch, prefer_timestamp_ntz=True)
@@ -171,59 +109,46 @@ class SnapshotStreamReader(DataSourceStreamReader):
         # recreated at the same path whose new chain reached seq 3" —
         # resuming a checkpoint against a recreated table must fail
         # loudly, not silently skip the new table's first versions
-        name = _read_current(Path(self.path))
-        seq = -1 if name is None else int(name.split("-")[1])
+        name, seq = _current(Path(self.path)) or (None, -1)
         return {"seq": seq, "manifest": name}
 
     def partitions(self, start: dict, end: dict):
-        table = Path(self.path)
-        ms = _manifests_at(table, [int(start["seq"]), int(end["seq"])])
-        pair_old = ms[int(start["seq"])]
-        pair_new = ms[int(end["seq"])]
-        m_old = pair_old[1] if pair_old is not None else None
-        m_new = pair_new[1] if pair_new is not None else None
+        since, upto = int(start["seq"]), int(end["seq"])
+        window = _window(Path(self.path), since, upto)
+        if window is None:
+            return []
         # identity check: the offset's recorded manifest must be the one
         # this chain resolves for that seq (absent on pre-identity
         # checkpoints and on the -1 initial offset)
-        for rec, pair, which in (
-            (start.get("manifest"), pair_old, "start"),
-            (end.get("manifest"), pair_new, "end"),
+        for rec, pin, which in (
+            (start.get("manifest"), window[0], "start"),
+            (end.get("manifest"), window[1], "end"),
         ):
-            if rec is not None and pair is not None and rec != pair[0]:
+            if rec is not None and pin.name is not None and rec != pin.name:
                 raise ValueError(
                     f"{self.path}: checkpointed {which} offset names "
-                    f"manifest {rec!r} but the live chain has {pair[0]!r} "
+                    f"manifest {rec!r} but the live chain has {pin.name!r} "
                     f"at that version — the table was recreated at this "
                     "path; restart the stream from a fresh checkpoint"
                 )
-        old = set(_files_at(m_old))
-        new = _files_at(m_new)
-        if not old <= set(new):
-            raise ValueError(
-                f"{self.path}: version {start['seq']} is not an "
-                f"append-ancestor of {end['seq']} (overwrite/compaction "
-                "intervened) — restart the stream from a fresh checkpoint"
-            )
+        files, dels = _added(*window)
         # A merge-on-read delete commit bumps seq but leaves `files`
         # unchanged, so file containment alone would plan an EMPTY batch
         # and silently keep emitting rows the batch reader anti-joins
         # away.  Streams cannot retract, so surface it loudly (same
-        # contract as the overwrite case above).  This also catches
-        # batch 0 over a table already carrying delete files.
-        if set(_deletes_at(m_old)) != set(_deletes_at(m_new)):
+        # contract as the overwrite case).  This also catches batch 0
+        # over a table already carrying delete files.
+        if dels:
             raise ValueError(
                 f"{self.path}: merge-on-read delete files changed between "
-                f"versions {start['seq']} and {end['seq']} — a stream "
+                f"versions {since} and {upto} — a stream "
                 "cannot retract already-emitted rows (and batch 0 would "
                 "emit logically-deleted ones).  Compact the table to "
                 "materialize deletes, then restart from a fresh checkpoint"
             )
         return [
-            SnapshotFilePartition(
-                str(table / _DATA / f), self.columns, self.arrow_schema
-            )
-            for f in new
-            if f not in old
+            SnapshotFilePartition(p, self.columns, self.arrow_schema)
+            for p in window[1].paths(files)
         ]
 
     def read(self, partition: SnapshotFilePartition):

@@ -92,6 +92,7 @@ def test_fused_sink_crash_before_flip_then_replay(spark, tmp_path, monkeypatch):
         changefeed_join_sink,
         read_changefeed_join,
     )
+    from ght2dm_spark.snapshots import prepare_commit
 
     dest = str(tmp_path / "cj")
     sink = changefeed_join_sink(
@@ -113,7 +114,7 @@ def test_fused_sink_crash_before_flip_then_replay(spark, tmp_path, monkeypatch):
     def crashing(df, path, batch_id):
         # stage durably via the real prepare (an orphan manifest, like
         # a genuine crash), then die before any pointer flip
-        inc.prepare_commit(df, path, mode="append")
+        prepare_commit(df, path, mode="append")
         raise RuntimeError("simulated crash between stage and flip")
 
     monkeypatch.setattr(inc, "commit_stream_batch", crashing)

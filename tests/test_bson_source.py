@@ -174,10 +174,13 @@ def test_malformed_interior_is_reject_not_crash(spark, tmp_path):
 def test_dated_directory_does_not_admit_or_stamp_undated_files(spark, tmp_path):
     """The date filter matches the file NAME (ght2dm.go:1023): an
     undated file inside a dated directory is skipped, and files keep
-    their OWN dates rather than inheriting an ancestor directory's."""
+    their OWN dates rather than inheriting an ancestor directory's.  A
+    date-shaped name that is not a calendar date is skipped like an
+    undated one instead of failing the whole read."""
     d = tmp_path / "archive-2020-01-01"
     d.mkdir()
     (d / "undated.bson").write_bytes(enc_doc({"id": 9, "login": "x"}))
+    (d / "2015-13-45.bson").write_bytes(enc_doc({"id": 8, "login": "y"}))
     (d / "2014-01-02.bson").write_bytes(enc_doc({"id": 1, "login": "a"}))
     rows = read_bson_dumps(spark, str(d), _schema).collect()
     assert [r["id"] for r in rows] == [1]

@@ -186,6 +186,36 @@ def test_delete_manifest_records_key_schema_and_stats(spark, tmp_path):
         set(range(1, 21)) - {3, 7, 19} | {100}
     )
 
+    # ... and deletes and rewrites must carry the sticky refresh
+    # watermarks (meta) like every other commit
+    import json
+    import pathlib
+
+    from ght2dm_spark.snapshots import rewrite_small_files
+
+    def manifest_now():
+        name = (pathlib.Path(table) / "CURRENT").read_text().strip()
+        return json.loads(
+            (pathlib.Path(table) / "_manifests" / name).read_text()
+        )
+
+    wm = {"source_version": 3, "view_def": {"n": ["count", None]}}
+    commit(prepare_commit(
+        spark.createDataFrame([(200, 0)], "k long, v long"), table,
+        mode="append", meta=wm,
+    ))
+    commit(delete_rows(spark.createDataFrame([(200,)], "k long"), table))
+    before = manifest_now()
+    assert before["meta"] == wm
+    assert rewrite_small_files(spark, table) is not None
+    after = manifest_now()
+    assert after["mode"] == "rewrite" and after["meta"] == wm
+    for k in ("delete_schema", "delete_stats", "delete_files", "schema"):
+        assert after[k] == before[k]
+    assert sorted(r.k for r in read_snapshot(spark, table).collect()) == sorted(
+        set(range(1, 21)) - {3, 7, 19} | {100}
+    )
+
 
 def test_delete_rows_null_rejection_leaves_no_orphans(spark, tmp_path):
     """The fused NULL-key guard stages the key file during the write
